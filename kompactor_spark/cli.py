@@ -77,7 +77,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--parallelism",
         type=int,
         default=1,
-        help="concurrent compaction groups (driver threads; Spark overlaps their stages)",
+        help="concurrent batch jobs (threads submitting them; Spark overlaps their stages). A batch "
+        "is every group of a pass whose files share a schema, written in one job",
     )
     p.add_argument(
         "--ingest-source",

@@ -127,19 +127,46 @@ def read_snapshot(path: str) -> SnapshotMetadata:
         return SnapshotMetadata.from_json(json.load(fh))
 
 
-def write_snapshot_atomic(meta: SnapshotMetadata, path: str) -> None:
-    """tmp + fsync + rename — a crash never leaves a torn catalog (B7)."""
+def write_json_atomic(obj, path: str, indent: int | None = None) -> None:
+    """tmp + fsync + rename: a crash never leaves a torn file (B7), and
+    the content is on disk before the rename. The directory is not
+    fsync'd: a journaling file system commits renames in order, so a
+    later rename that survives a power loss implies this one did. The
+    tmp file lives beside ``path`` and ends in ``.tmp``."""
     d = os.path.dirname(os.path.abspath(path))
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
     try:
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
-            json.dump(meta.to_json(), fh, indent=2)
+            json.dump(obj, fh, indent=indent)
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+def write_snapshot_atomic(meta: SnapshotMetadata, path: str) -> None:
+    """A snapshot written with ``write_json_atomic`` (B7)."""
+    write_json_atomic(meta.to_json(), path, indent=2)
+
+
+def footer_time_stats(parquet_path: str, time_col: str) -> tuple[int, int | None, int | None]:
+    """(rows, min, max) of ``time_col`` from a Parquet footer — no data
+    scan, int-exact (B3). min/max are None when the writer left no
+    statistics for the column."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(parquet_path).metadata
+    tmin = tmax = None
+    for rg in range(md.num_row_groups):
+        for ci in range(md.num_columns):
+            col = md.row_group(rg).column(ci)
+            if col.path_in_schema == time_col and col.statistics is not None and col.statistics.has_min_max:
+                s = col.statistics
+                tmin = s.min if tmin is None else min(tmin, s.min)
+                tmax = s.max if tmax is None else max(tmax, s.max)
+    return md.num_rows, tmin, tmax
 
 
 def bootstrap_snapshot(
@@ -157,8 +184,6 @@ def bootstrap_snapshot(
     import glob as _glob
     import re as _re
 
-    import pyarrow.parquet as pq
-
     files: list[tuple[int, int, ParquetFileInfo]] = []
     next_id = 1
     base = os.path.join(data_dir, host, "dbs")
@@ -168,15 +193,7 @@ def bootstrap_snapshot(
         if not m:
             continue
         db_id, table_id = int(m.group(1)), int(m.group(2))
-        md = pq.ParquetFile(p).metadata
-        tmin = tmax = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == time_col and col.statistics is not None and col.statistics.has_min_max:
-                    s = col.statistics
-                    tmin = s.min if tmin is None else min(tmin, s.min)
-                    tmax = s.max if tmax is None else max(tmax, s.max)
+        rows, tmin, tmax = footer_time_stats(p, time_col)
         files.append(
             (
                 db_id,
@@ -185,7 +202,7 @@ def bootstrap_snapshot(
                     id=next_id,
                     path=rel,
                     size_bytes=os.path.getsize(p),
-                    row_count=md.num_rows,
+                    row_count=rows,
                     chunk_time=tmin or 0,
                     min_time=tmin or 0,
                     max_time=tmax or 0,

@@ -23,6 +23,7 @@ from kompactor_spark.compaction.metadata import ParquetFileInfo, SnapshotMetadat
 # files at hour (h) or generation/day (g) level; split parts p<i>.
 RAW_FILE_RE = re.compile(r"(\d{10})\.parquet$")
 COMPACTED_FILE_RE = re.compile(r"c_(\d{10})_(\d{10})_[gh]\d+(?:_p\d+)?\.parquet$")
+SPLIT_PART_RE = re.compile(r"(c_\d{10}_\d{10}_[gh]\d+)_p\d+\.parquet$")
 DATE_HOUR_RE = re.compile(r"(\d{4}-\d{2}-\d{2})/(\d{2})")
 
 
@@ -72,6 +73,18 @@ def is_compacted_file(filename: str) -> bool:
     return COMPACTED_FILE_RE.search(os.path.basename(filename)) is not None
 
 
+def is_one_split(files: list[ParquetFileInfo]) -> bool:
+    """True when the files are the parts of ONE split output: already
+    compacted, so merging them again would only re-split them (P1)."""
+    stems = set()
+    for f in files:
+        m = SPLIT_PART_RE.search(f.path)
+        if m is None:
+            return False
+        stems.add((os.path.dirname(f.path), m.group(1)))
+    return len(stems) == 1
+
+
 @dataclass(frozen=True)
 class GroupKey:
     host: str
@@ -108,6 +121,8 @@ class CompactionGroup:
 @dataclass
 class CompactionPlan:
     groups: list[CompactionGroup]
+    # groups left alone: a single file, the parts of one split output
+    # (``is_one_split``), or (K2) a day still inside the window
     skipped_singletons: int = 0
 
 
@@ -146,7 +161,7 @@ def plan_compaction(
 ) -> CompactionPlan:
     """Flatten → regex-extract → group (B5 fixed) → dedup by path
     (overlapping snapshots, kompactor.ts:202-203) → drop singletons
-    (kompactor.ts:213).
+    (kompactor.ts:213) and the parts of one split output.
 
     ``before_hour_ns`` scopes the plan to CLOSED hours — groups whose
     hour ends at or before the cutoff. This is the continuous-
@@ -165,7 +180,7 @@ def plan_compaction(
         if before_hour_ns is not None and hour_start_ns(key) + 3_600_000_000_000 > before_hour_ns:
             continue  # hour still open — not counted as a skipped singleton
         files = list(by_key[key].values())
-        if len(files) <= 1:
+        if len(files) <= 1 or is_one_split(files):
             skipped += 1
             continue
         groups.append(CompactionGroup(key=key, files=files))
@@ -248,7 +263,10 @@ def plan_generation(
     older than the compaction window (time_window_hours before now_ns) —
     pass now_ns=None to compact every day (manual/backfill mode).
     Files already at generation level and >= large cutoff are left
-    alone (D2: no value re-writing a full-size file)."""
+    alone (D2: no value re-writing a full-size file), and so is a day
+    whose only files are the parts of one split output, hour- or
+    day-level: merging them would rewrite the same parts under a new
+    name. Such a day counts in ``skipped_singletons``."""
     by_key: dict[GroupKey, dict[str, ParquetFileInfo]] = defaultdict(dict)
     for snap in snapshots:
         for _db_id, _table_id, f in snap.all_files():
@@ -278,7 +296,7 @@ def plan_generation(
         if now_ns is not None and files and max(f.max_time for f in files) > now_ns - window_ns:
             skipped += 1
             continue
-        if len(files) <= 1:
+        if len(files) <= 1 or is_one_split(files):
             skipped += 1
             continue
         groups.append(GenerationGroup(key=key, files=files))

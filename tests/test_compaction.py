@@ -206,6 +206,7 @@ def test_dry_run_is_read_only(spark, tmp_path):
     assert report.compacted_groups == 1  # planned
     assert disk_parquets(root) == before_files
     assert open(glob.glob(os.path.join(root, FX.HOST, "snapshots", "*.json"))[0]).read() == before_snap
+    assert not os.path.exists(os.path.join(root, FX.HOST, ".staging"))
 
 
 # -- K2: generation (daily) level ------------------------------------------
@@ -250,6 +251,38 @@ def test_generation_window_gating(spark, tmp_path):
     assert cold.compacted_groups == 1
 
 
+def test_generation_leaves_one_split_alone(spark, tmp_path):
+    """K2 leaves a day alone when its only files are the parts of ONE
+    split output (a merge would rewrite the same parts under a day-level
+    name) and counts it in ``skipped_singletons``. A file of another
+    stem in that day makes it a merge again."""
+    from kompactor_spark.compaction import CompactionConfig
+
+    root = str(tmp_path / "gensplit")
+    b = FX.basic_hour(root)
+    cfg = CompactionConfig(max_desired_file_size_bytes=4000)
+    parts = run_job(spark, root, config=cfg).results[0].output_paths
+    assert len(parts) >= 2
+
+    gen = CompactionJob(spark, root, [FX.HOST], config=cfg).run_generation()[0]
+    assert (gen.planned_groups, gen.compacted_groups, gen.skipped_singletons) == (0, 0, 1)
+    assert sorted(f.path for _, _, _, f in catalog_files(root)) == sorted(parts)
+
+    h15 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS) + 3600 * FX.NS
+    extra = b.add_parquet(0, 3, "2025-01-26", 15, "0000000009.parquet", FX.make_rows(20, h15, 1000 * FX.NS, seed=9))
+    extra["info"]["id"] = 1000  # above the ids the hour pass handed out
+    b.write_snapshot("0002.info.json", entries=[extra])
+    before = rows_by_table(root)
+    gen = CompactionJob(spark, root, [FX.HOST], config=cfg).run_generation()[0]
+    assert (gen.compacted_groups, gen.skipped_singletons) == (1, 0)
+    (res,) = gen.results
+    assert sorted(res.input_paths) == sorted(parts + [extra["info"]["path"]])
+    assert all("_g" in os.path.basename(p) for p in res.output_paths)
+    assert rows_by_table(root) == before
+    assert_invariants(root)
+    assert CompactionJob(spark, root, [FX.HOST], config=cfg).run_generation()[0].compacted_groups == 0
+
+
 def test_oversized_output_splits(spark, tmp_path):
     """D2/D3: projected output above the large cutoff splits 70/30 by
     time into _p<i> parts; conservation + invariants hold."""
@@ -288,8 +321,8 @@ def test_compute_split_cuts_unit():
 
 
 def test_parallel_group_execution(spark, tmp_path):
-    """Groups compacted from concurrent driver threads: identical
-    results + invariants; catalog writes serialized by the meta lock."""
+    """parallelism=4 (concurrent batch jobs): identical results +
+    invariants; catalog writes serialized by the meta lock."""
     root = str(tmp_path / "par")
     FX.multi_hour(root)
     before = rows_by_table(root)
@@ -300,6 +333,181 @@ def test_parallel_group_execution(spark, tmp_path):
     # fresh ids unique across concurrently-compacted groups
     ids = [f.id for _, _, _, f in catalog_files(root)]
     assert len(ids) == len(set(ids))
+
+
+def test_schema_drift_keeps_every_column(spark, tmp_path):
+    """A field only some of an hour's files carry survives compaction,
+    null where a file lacked it (a single file's schema used to win and
+    the column was dropped before the sources were deleted). The drift
+    group is a batch of its own, beside a same-schema group."""
+    import pyarrow as pa
+
+    root = str(tmp_path / "drift")
+    b = FX.LayoutBuilder(root)
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000001.parquet", FX.make_rows(20, h14, 1000 * FX.NS, seed=1))
+    extra = FX.make_rows(15, h14 + 5 * FX.NS, 1000 * FX.NS, seed=2)
+    extra = extra.append_column("f_new", pa.array(range(100, 115), pa.int64()))
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000002.parquet", extra)
+    for wal in (3, 4):
+        rows = FX.make_rows(10, h14 + 3600 * FX.NS + wal * FX.NS, 1000 * FX.NS, seed=wal)
+        b.add_parquet(0, 3, "2025-01-26", 15, f"{wal:010d}.parquet", rows)
+    b.write_snapshot()
+
+    report = run_job(spark, root, parallelism=2)
+    assert report.compacted_groups == 2
+    drift = next(r for r in report.results if r.key[4] == "14")
+    (out_rel,) = drift.output_paths
+    tbl = pq.read_table(os.path.join(root, out_rel))
+    assert tbl.column_names == FX.data_schema().names + ["f_new"]
+    f_new = tbl.column("f_new").to_pylist()
+    assert sorted(v for v in f_new if v is not None) == list(range(100, 115))
+    assert f_new.count(None) == 20
+    assert_invariants(root)
+
+
+def test_split_leaves_empty_part_out(spark, tmp_path):
+    """Sparse data under a small size target: rows only at the two ends
+    of the hour, so the middle split part is empty. It gets no file and
+    no catalog entry; the others carry exact footer stats; a second
+    pass leaves the parts of one split alone (P1)."""
+    from kompactor_spark.compaction import CompactionConfig, compute_split_cuts
+
+    root = str(tmp_path / "sparse")
+    b = FX.LayoutBuilder(root)
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    for i, t0 in enumerate([h14, h14 + 3590 * FX.NS, h14 + 2 * FX.NS]):
+        b.add_parquet(0, 3, "2025-01-26", 14, f"{i + 1:010d}.parquet", FX.make_rows(40, t0, 10 * FX.NS, seed=i))
+    b.write_snapshot()
+    cfg = CompactionConfig(max_desired_file_size_bytes=1000)
+    files = [e["info"] for e in b.files]
+    cuts = compute_split_cuts(
+        min(f["min_time"] for f in files), max(f["max_time"] for f in files), sum(f["size_bytes"] for f in files), cfg
+    )
+    assert len(cuts) == 2  # three parts; only the first and last hold rows
+
+    before = rows_by_table(root)
+    report = run_job(spark, root, config=cfg)
+    (res,) = report.results
+    assert [os.path.basename(p)[-11:] for p in res.output_paths] == ["_p0.parquet", "_p2.parquet"]
+    assert res.row_count == 120
+    cataloged = sorted(f.path for _, _, _, f in catalog_files(root))
+    assert cataloged == sorted(res.output_paths)
+    assert rows_by_table(root) == before
+    assert_invariants(root)
+    assert run_job(spark, root, config=cfg).compacted_groups == 0
+
+
+def hour_groups(root, n):
+    """``n`` one-schema (table, hour) groups of two or three files."""
+    b = FX.LayoutBuilder(root)
+    wal = 1
+    for g in range(n):
+        table, hour = 3 + g // 2, 11 + g % 2
+        hstart = (FX.BASE_NS // (3600 * FX.NS) + hour) * 3600 * FX.NS
+        for i in range(2 + g % 2):
+            rows = FX.make_rows(25, hstart + i * 5 * FX.NS, 2000 * FX.NS, seed=wal)
+            b.add_parquet(0, table, "2025-01-26", hour, f"{wal:010d}.parquet", rows)
+            wal += 1
+    b.write_snapshot()
+    return b
+
+
+def last_job(sc) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_one_schema_pass_is_one_batch(spark, tmp_path):
+    """Shape pin: a 4-group, one-schema pass runs exactly 2 Spark jobs
+    (schema inference + the write), and the write plan sorts once — the
+    within-partition (__out, time) sort, so V1Writes adds no sort of its
+    own — with no Exchange: one task per group, time order kept."""
+    root = str(tmp_path / "four")
+    hour_groups(root, 4)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+    before = last_job(sc)
+    report = run_job(spark, root)
+    assert report.compacted_groups == 4
+    write = last_job(sc)
+    assert write - before == 2
+    tracker = sc.statusTracker()
+    assert [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(write).stageIds] == [4]
+
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = executions.apply(executions.size() - 1).physicalPlanDescription()
+    tree = plan.split("\n\n")[0]
+    assert "InsertIntoHadoopFsRelationCommand" in tree, tree
+    assert tree.count("Sort (") == 1 and "Exchange" not in tree, tree
+    assert tree.count("Coalesce (") == 4, tree
+    assert "Arguments: [__out#" in plan and "ASC NULLS FIRST, time#" in plan, plan
+    assert_invariants(root)
+
+
+def test_concurrent_batches_stress(spark, tmp_path):
+    """Six schemas make six batches; eight submitting threads (more than
+    cores) commit them through the shared in-memory catalog with a short
+    thread switch interval. A lost catalog update would drop an entry,
+    repeat a file id or leave a dangling path."""
+    import sys
+
+    import pyarrow as pa
+
+    root = str(tmp_path / "stress")
+    b = FX.LayoutBuilder(root)
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    wal = 1
+    for table in range(6):
+        for _ in range(3):
+            rows = FX.make_rows(12, h14 + wal * FX.NS, 1000 * FX.NS, seed=wal)
+            rows = rows.append_column(f"f_t{table}", pa.array([table] * 12, pa.int64()))
+            b.add_parquet(0, table, "2025-01-26", 14, f"{wal:010d}.parquet", rows)
+            b.write_snapshot(f"{wal:04d}.info.json", entries=b.files[-1:])
+            wal += 1
+    before = rows_by_table(root)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        report = run_job(spark, root, parallelism=8)
+    finally:
+        sys.setswitchinterval(interval)
+    assert report.compacted_groups == 6
+    assert rows_by_table(root) == before
+    assert_invariants(root)
+    entries = catalog_files(root)
+    assert len(entries) == 6 * 3  # each output listed by the 3 snapshots of its inputs
+    ids = {f.path: f.id for _, _, _, f in entries}
+    assert len(ids) == len(set(ids.values())) == 6
+
+
+def test_pass_keeps_off_the_callers_session(spark, tmp_path, monkeypatch):
+    """The union setting a pass needs is made on a session of the pass's
+    own, never on the caller's, which other threads share; the pass's
+    session starts from the caller's runtime conf."""
+    from kompactor_spark.compaction import job
+
+    key = "spark.sql.unionOutputPartitioning"
+    root = str(tmp_path / "session")
+    hour_groups(root, 2)
+    before = spark.conf.get(key, None)
+    seen = []
+    write_batch = job.CompactionJob._write_batch
+
+    def spy(self, session, batch, batch_dir):
+        seen.append((session.conf.get(key), session.conf.get("spark.kompactor.probe", None), spark.conf.get(key, None)))
+        return write_batch(self, session, batch, batch_dir)
+
+    monkeypatch.setattr(job.CompactionJob, "_write_batch", spy)
+    spark.conf.set("spark.kompactor.probe", "on")
+    try:
+        assert run_job(spark, root).compacted_groups == 2
+    finally:
+        spark.conf.unset("spark.kompactor.probe")
+    assert seen == [("false", "on", before)]
+    assert spark.conf.get(key, None) == before
+    assert_invariants(root)
 
 
 def test_output_is_zstd(spark, tmp_path):
